@@ -733,15 +733,8 @@ _UNPARTITIONED_WINDOW_WHITELIST: dict[str, frozenset] = {
     "runs_test_daily_revenue": frozenset({"cents", "day", "<unordered>"}),
     "max_drawdown_daily": frozenset({"day"}),
     "local_extrema_days": frozenset({"day"}),
-    "ewma_daily_revenue": frozenset({"d"}),
     "acf_daily_revenue": frozenset({"d"}),
-    # Croston stages the single-part demand-occurrence sequence —
-    # calendar-bounded (≤ one row per ship day of ONE part), the
-    # _daily_seq carve-out
-    "croston_intermittent_demand": frozenset({"d"}),
     "theil_sen_daily_trend": frozenset({"d", "s", "<unordered>"}),
-    "holt_linear_backtest": frozenset({"d"}),
-    "holt_winters_dow_backtest": frozenset({"d"}),
     "dow_naive_forecast_backtest": frozenset({"<unordered>"}),
     "streaming_activity_heatmap": frozenset({"<unordered>"}),
     "activity_heatmap_dow_hour": frozenset({"<unordered>"}),
@@ -783,7 +776,10 @@ _UNPARTITIONED_WINDOW_WHITELIST: dict[str, frozenset] = {
     # dtw_similar_user_pairs: its quartile windows disappeared from
     # the plan when the wave-2 staged-table reuse bottomed the SAX
     # index at a parquet leaf — entry removed when the regenerated
-    # PLANS.md exposed the (improved) drift
+    # PLANS.md exposed the (improved) drift; likewise ewma, croston,
+    # holt_linear and holt_winters: their day-index window now runs
+    # inside the staged daily/occurrence sequence build, so their
+    # plans start at its parquet leaf
 }
 
 

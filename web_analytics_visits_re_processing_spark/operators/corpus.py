@@ -177,10 +177,11 @@ def temperature_sample(
     )
 
 
-#: last eagerly-checkpointed RESULT DataFrame (see importance_scores):
-#: at most one invocation's (small, doc-level) result stays persisted;
-#: the exploded-gram cache itself never survives the call.
-_LAST_RESULT_CACHE: dict[str, DataFrame] = {}
+#: last eagerly-persisted RESULT DataFrame (see importance_scores) and
+#: the application id of the context that holds its blocks: at most
+#: one invocation's (small, doc-level) result stays persisted; the
+#: exploded-gram cache itself never survives the call.
+_LAST_RESULT_CACHE: dict = {}
 
 
 def importance_scores(
@@ -292,10 +293,13 @@ def importance_scores(
         scored = scored.persist()
         scored.count()
         doc_b.unpersist(blocking=False)
-        prev = _LAST_RESULT_CACHE.pop("df", None)
-        if prev is not None:
+        # A stopped context's blocks are already gone, and calling
+        # into its JVM raises, so only a live-context frame is released.
+        app_id = spark.sparkContext.applicationId
+        prev = _LAST_RESULT_CACHE.get("df")
+        if prev is not None and _LAST_RESULT_CACHE["app_id"] == app_id:
             prev.unpersist(blocking=False)
-        _LAST_RESULT_CACHE["df"] = scored
+        _LAST_RESULT_CACHE.update(df=scored, app_id=app_id)
     return scored
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.plans.registry import query
+from web_analytics_visits_re_processing_spark.sources.staging import staged
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 
 # --- SCD Type-2 dimension build -------------------------------------------------
@@ -567,40 +568,29 @@ def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Croston intermittent-demand forecast ----------------------------------------
 
-# Single-slot staged occurrence sequence (the _daily_seq convention:
-# persist once per (session, sf), unpersist evicted entries — the
-# recursion re-evaluates its referenced relation per step, and
-# re-staging per invocation both re-scans lineitem and LEAKS a
-# persisted frame each call).
-_CROSTON_SEQ_CACHE: dict = {}
-
-
 def _croston_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    hit = _CROSTON_SEQ_CACHE.get(key)
-    if hit is not None:
-        return hit
-    li = load_table(spark, sf_dir, "lineitem")
-    pk = li.agg(F.min("l_partkey")).first()[0]
-    occ = (
-        li.where(F.col("l_partkey") == pk)
-        .groupBy(F.to_date("l_shipdate").alias("d"))
-        .agg(F.sum("l_quantity").cast("long").alias("qty"))
-    )
-    wd = Window.orderBy("d")
-    seq = occ.select(
-        "d",
-        "qty",
-        F.row_number().over(wd).alias("n"),
-        F.coalesce(F.datediff(F.col("d"), F.lag("d").over(wd)), F.lit(1))
-        .cast("long")
-        .alias("gap_days"),
-    ).persist()
-    seq.count()
-    for k in list(_CROSTON_SEQ_CACHE):
-        _CROSTON_SEQ_CACHE.pop(k).unpersist(blocking=False)
-    _CROSTON_SEQ_CACHE[key] = seq
-    return seq
+    """The demand-occurrence sequence of the lowest part key, staged
+    once per session and fixture (the ``_daily_seq`` convention)."""
+
+    def build() -> DataFrame:
+        li = load_table(spark, sf_dir, "lineitem")
+        pk = li.agg(F.min("l_partkey")).first()[0]
+        occ = (
+            li.where(F.col("l_partkey") == pk)
+            .groupBy(F.to_date("l_shipdate").alias("d"))
+            .agg(F.sum("l_quantity").cast("long").alias("qty"))
+        )
+        wd = Window.orderBy("d")
+        return occ.select(
+            "d",
+            "qty",
+            F.row_number().over(wd).alias("n"),
+            F.coalesce(F.datediff(F.col("d"), F.lag("d").over(wd)), F.lit(1))
+            .cast("long")
+            .alias("gap_days"),
+        )
+
+    return staged(spark, sf_dir, "croston_seq", build)
 
 
 _CROSTON_ORACLE = """

@@ -18,29 +18,13 @@ from pyspark.sql import functions as F
 
 from web_analytics_visits_re_processing_spark.plans.registry import query
 from web_analytics_visits_re_processing_spark.plans.webanalytics import _events
+from web_analytics_visits_re_processing_spark.sources.staging import staged
 from web_analytics_visits_re_processing_spark.sources.tables import load_table
 from web_analytics_visits_re_processing_spark.plans.webanalytics_r7 import (
     _CHURN_QUIET_DAYS,
     _HAZARD_HORIZON,
     q_churn_hazard_curve,
 )
-
-# Single-slot materialized-table cache, one slot PER NAME keyed by
-# (session, sf_dir): a recursive CTE re-evaluates its referenced
-# relations every step, so the ~20-row table it recurses over must be
-# materialized first (the EWMA lesson, commit e18b56b). Delegates to
-# webanalytics._lp_cached, which STAGES the table to a temp parquet
-# and reads it back instead of persist(): lineage truncates for real,
-# so every downstream reference (including the GSP level tables'
-# 3-way self-join legs) is a leaf file scan and the audited plan tree
-# stays shallow — the r8 plan-bloat fix; see the _LP_CACHE comment
-# for the full rationale (and why localCheckpoint stays banned).
-def _persisted(name: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    from web_analytics_visits_re_processing_spark.plans.webanalytics import (
-        _lp_cached,
-    )
-
-    return _lp_cached(name, spark, sf_dir, build)
 
 
 # The hazard sub-pipeline shared with churn_hazard_curve's oracle
@@ -124,8 +108,8 @@ def q_km_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one persisted ≤{_HAZARD_HORIZON}-row table in a single-slot
     cache. Hazard semantics (censoring cutoff, at-risk accounting)
     are churn_hazard_curve's, verbatim (webanalytics_r7.py)."""
-    _persisted(
-        "km_hazard", spark, sf_dir,
+    staged(
+        spark, sf_dir, "km_hazard",
         lambda: q_churn_hazard_curve(spark, sf_dir),
     ).createOrReplaceTempView("km_hazard_r8")
     # r12: recursion UNROLLED 4 horizon-days per step (the ewma
@@ -328,7 +312,7 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # user-level rollup once. It is user-granular (one row per user,
     # never event-scale) and spill-safe; the single-slot cache evicts
     # it when the sf changes.
-    s2 = _persisted("gsp_s2", spark, sf_dir, build_s2)
+    s2 = staged(spark, sf_dir, "gsp_s2", build_s2)
 
     # r14 (verdict item 9, the PQ-hoist lesson applied to the level
     # scans; then the not-yet int-index follow-through at close-out):
@@ -384,10 +368,10 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             " support_ppm long, n_f1 long, n_f2 long, n_c3 long",
         )
     lits = ",".join("'" + s.replace("'", "''") + "'" for s in syms1)
-    s2a = _persisted(
-        "gsp_s2a",
+    s2a = staged(
         spark,
         sf_dir,
+        "gsp_s2a",
         lambda: s2.select(
             F.expr(
                 f"transform(array({lits}), s -> filter(sequence(1,"
@@ -419,8 +403,8 @@ def q_gsp_apriori_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # F2 is referenced three times by the Apriori join — persist the
     # ≤|F1|²-row id-pair table so the level-2 scan runs once, not
     # three times.
-    f2 = _persisted(
-        "gsp_f2a", spark, sf_dir,
+    f2 = staged(
+        spark, sf_dir, "gsp_f2a",
         lambda: (
             scan2.groupBy("ai", "bi")
             .agg(F.sum("hit").alias("sup"))
@@ -854,7 +838,7 @@ def q_holt_winters_dow_backtest(
     sequence — exact on this fixture (all 30 days have purchases at
     every SF); a production gap-day series runs gap_fill_hourly_
     counts' spine first. Scale: identical to EWMA/Holt — recursion
-    depth is calendar days; the event-scale rollup is the persisted
+    depth is calendar days; the event-scale rollup is the staged
     ~30-row daily spine (shared cache with EWMA/Holt via _daily_seq);
     the per-step state is 10 integers. Citation: Winters 1960;
     Hyndman & Athanasopoulos (fpp3) §8.3 additive form."""
@@ -2430,7 +2414,7 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stage the bounded community table once (house pattern), then
     # the total is a leaf-scan aggregate broadcast back — r9
     # single-partition-window retirement, second audit pass.
-    rows_staged = _persisted("modularity_comm", spark, sf_dir, lambda: rows)
+    rows_staged = staged(spark, sf_dir, "modularity_comm", lambda: rows)
     tot = rows_staged.agg(
         F.sum("q_contrib_ppm").cast("long").alias("modularity_ppm")
     )
