@@ -150,18 +150,104 @@ def test_latin1_gzip_byte_exact_roundtrip(spark, tmp_path):
 def test_visitor_rows_survive_bad_timestamps(spark, tmp_path):
     """Reference branch order (main.py:214 vs :216): visitors are
     emitted before the timestamp stage, so a row with an unparseable
-    ts yields a visitor but never a hit or visit."""
+    ts yields a visitor but never a hit or visit. Both arms of
+    ``dedup_visitors``: one row per distinct visitor, or the
+    reference's one row per parsed row, bad-ts rows included."""
     p = tmp_path / "badts.tsv"
     p.write_text(
         "100\tu1\ta\t\t\t1\tp\ts\tibmA\tscvA\n"
         "\tu2\tb\t\t\t1\tp\ts\tibmB\tscvB\n"  # empty ts
+        "150\tu1\ta\t\t\t1\tp\ts\tibmA\tscvA\n"
+        "x\tu2\tb\t\t\t1\tp\ts\tibmB\tscvB\n"  # non-numeric ts
     )
     counts = run_visits_pipeline(spark, str(p), str(tmp_path / "out"))
-    assert counts == {"hits": 1, "visits": 1, "visitors": 2}
+    assert counts == {"hits": 2, "visits": 1, "visitors": 2}
     visitors = {
         tuple(r) for r in spark.read.csv(str(tmp_path / "out/visitors")).collect()
     }
     assert visitors == {("u1_a", "ibmA", "scvA"), ("u2_b", "ibmB", "scvB")}
+
+    out = str(tmp_path / "out_all")
+    counts = run_visits_pipeline(spark, str(p), out, dedup_visitors=False)
+    assert counts == {"hits": 2, "visits": 1, "visitors": 4}
+    visitors = sorted(tuple(r) for r in spark.read.csv(f"{out}/visitors").collect())
+    assert visitors == [("u1_a", "ibmA", "scvA")] * 2 + [("u2_b", "ibmB", "scvB")] * 2
+
+
+def test_visits_group_on_key_and_user_with_underscored_id_halves(spark, tmp_path):
+    """``user_id`` joins the two id halves with ``_``, as the reference
+    does, so halves that contain ``_`` can make the same ``user_id``
+    from different pairs: ("a_b", "c") and ("a", "b_c") are one visitor
+    and one visit. ``visit_key`` still names exactly one ``(user_id,
+    visit_start)``: the part after its last ``_`` is the integer start,
+    so the ``(visit_key, user_id)`` grouping yields one row per key."""
+    p = tmp_path / "underscored.tsv"
+    p.write_text(
+        "100\ta_b\tc\t\t\t1\tp\ts\ti\tv\n"
+        "160\ta\tb_c\t\t\t1\tp\ts\ti\tv\n"
+        "100\ta\tb\t\t\t1\tp\ts\ti\tv\n"
+        "9000\ta_b\tc_9000\t\t\t1\tp\ts\ti\tv\n"
+    )
+    out = str(tmp_path / "out")
+    counts = run_visits_pipeline(spark, str(p), out)
+    assert counts == {"hits": 4, "visits": 3, "visitors": 3}
+    visits = sorted(tuple(r) for r in spark.read.csv(f"{out}/visits").collect())
+    assert visits == [
+        ("a_b_100", "a_b", "100", "100"),
+        ("a_b_c_100", "a_b_c", "100", "160"),
+        ("a_b_c_9000_9000", "a_b_c_9000", "9000", "9000"),
+    ]
+
+
+def _ops_above_cache(plan) -> list[str]:
+    """Node names of an executed physical plan, top down, stopping at
+    the cache scan (the cached plan's own scan and exchange sit below
+    it and are not listed)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _ops_above_cache(plan.executedPlan())
+    if name == "InMemoryTableScan":
+        return [name]
+    if name.endswith("QueryStage"):
+        return [name, *_ops_above_cache(plan.plan())]
+    kids = plan.children()
+    return [name, *(n for i in range(kids.size()) for n in _ops_above_cache(kids.apply(i)))]
+
+
+def test_sinks_read_one_coalesced_cache(spark, tmp_path):
+    """One scan, one exchange: visits and visitors read only the
+    persisted frame, with no file scan and no exchange of their own
+    (both group on keys holding the cache's hash key ``user_id``), so
+    the parse and its ``hitlog_parse`` counters ride one action. The
+    cache is coalesced below ``spark.sql.shuffle.partitions``, and the
+    cached-plan coalescing conf is back at its prior value afterwards."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    prior = spark.conf.get(key, None)
+    p = tmp_path / "users.tsv"
+    p.write_text(
+        "".join(
+            f"{1000 + 700 * i}\tu{u}\tx\t\t\t1\tp\ts\tibm{u}\tscv{u}\n"
+            for u in range(12)
+            for i in range(6)
+        )
+        + "\tu0\tx\t\t\t1\tp\ts\tibm0\tscv0\n"  # empty ts
+    )
+    result = build_visits_pipeline(read_hitlog(spark, str(p), drop_bad_ts=False))
+    try:
+        assert spark.conf.get(key, None) == prior
+        assert result.hits.count() == 72
+        for name in ("visits", "visitors"):
+            df = getattr(result, name)
+            df.collect()
+            ops = _ops_above_cache(df._jdf.queryExecution().executedPlan())
+            assert ops.count("InMemoryTableScan") == 1, (name, ops)
+            assert not [o for o in ops if "Exchange" in o], (name, ops)
+            assert not [o for o in ops if "Scan" in o and o != "InMemoryTableScan"], (name, ops)
+        assert result.stamped.rdd.getNumPartitions() < int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        )
+    finally:
+        result.stamped.unpersist()
 
 
 def test_parser_roundtrip_fuzz(spark):
@@ -291,3 +377,20 @@ def test_strict_mode_golden_output_vs_default(spark, tmp_path):
     out_default = str(tmp_path / "default")
     counts = run_visits_pipeline(spark, str(src), out_default)
     assert counts == {"hits": 3, "visits": 1, "visitors": 1}
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    """A key set before gets its value back, a key unset before is
+    unset again (not pinned to its default), also when the body raises."""
+    from web_analytics_visits_re_processing_spark.session import scoped_conf
+
+    was_set = "spark.sql.shuffle.partitions"
+    was_unset = "spark.sql.streaming.numRecentProgressUpdates"
+    prior = spark.conf.get(was_set)
+    assert spark.conf.get(was_unset, None) is None
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {was_set: "3", was_unset: "7"}):
+            assert (spark.conf.get(was_set), spark.conf.get(was_unset)) == ("3", "7")
+            raise RuntimeError
+    assert spark.conf.get(was_set) == prior
+    assert spark.conf.get(was_unset, None) is None

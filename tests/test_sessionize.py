@@ -11,8 +11,11 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
     bridge, with_session_columns) and Spark's native session_window
     aggregate produce IDENTICAL visit sets on adversarial inputs —
     including events landing exactly at prev_ts + gap (merge, not
-    split) and duplicate timestamps."""
+    split) and duplicate timestamps. Rows with a NULL ts pass through
+    with_session_columns with all four session columns NULL, and leave
+    the timed rows' columns exactly as computed without them."""
     import datetime as dt
+    from collections import Counter
 
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -32,21 +35,35 @@ def test_lag_formulation_equals_session_window_fuzz(spark):
         max_size=25,
     )
 
-    @given(events)
+    untimed_users = st.lists(st.integers(0, 3), max_size=4)
+    session_cols = ["session_seq", "visit_start", "visit_end", "visit_key"]
+
+    @given(events, untimed_users)
     @settings(max_examples=15, deadline=None)
-    def check(evs):
+    def check(evs, untimed):
+        schema = "user_id long, ts timestamp, value double"
         rows = [
             (u, base + dt.timedelta(seconds=t * gap / 2), 1.0)
             for u, t in evs
         ]
-        df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
+        df = spark.createDataFrame(rows + [(u, None, 1.0) for u in untimed], schema)
         native = {
             (r["user_id"], r["visit_start"], r["visit_end"], r["n_hits"])
             for r in sessionize_visits(df, gap_seconds=gap).collect()
         }
+        stamped = with_session_columns(df, gap_seconds=gap)
+        out = stamped.select("user_id", "ts", *session_cols).collect()
+        assert Counter(r["user_id"] for r in out if r["ts"] is None) == Counter(untimed)
+        for r in out:
+            if r["ts"] is None:
+                assert [r[c] for c in session_cols] == [None] * 4, r
+        alone = with_session_columns(spark.createDataFrame(rows, schema), gap_seconds=gap)
+        assert Counter(tuple(r) for r in out if r["ts"] is not None) == Counter(
+            tuple(r) for r in alone.select("user_id", "ts", *session_cols).collect()
+        )
         lagged = {
             tuple(r)
-            for r in with_session_columns(df, gap_seconds=gap)
+            for r in stamped.where(F.col("ts").isNotNull())
             .groupBy("user_id", "session_seq")
             .agg(
                 F.min("ts").alias("s"),
@@ -133,3 +150,26 @@ def test_incremental_merge_equals_full_batch(spark):
     assert got[(1, m(-120))] == 2
     assert got[(1, m(-30))] == 3
     assert got[(2, m(-31))] == 1 and got[(2, dt.datetime(2024, 1, 16, 0, 0, 1))] == 1
+
+
+def test_session_queries_match_oracle_with_an_untimed_event(spark, sf_dir, tmp_path):
+    """with_session_columns keeps NULL-ts rows; the registry queries
+    built on it must still drop them, as their oracles' ``WHERE ts IS
+    NOT NULL`` does. One untimed event for an existing user would
+    otherwise add a NULL-keyed hit or a phantom (user, NULL) session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from web_analytics_visits_re_processing_spark.plans import ORACLES, QUERIES
+
+    from tests.oracle_utils import assert_matches_oracle
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    ts_at = events.schema.get_field_index("ts")
+    untimed = events.slice(0, 1).set_column(
+        ts_at, events.schema.field(ts_at), pa.nulls(1, events.schema.field(ts_at).type)
+    )
+    pq.write_table(pa.concat_tables([events, untimed]), str(tmp_path / "events.parquet"))
+    for name in ("sessionize_hits", "session_path_3grams", "session_entry_exit_matrix"):
+        df = QUERIES[name](spark, str(tmp_path))
+        assert_matches_oracle(df, ORACLES[name], str(tmp_path))

@@ -30,8 +30,9 @@ Divergences from the reference, both deliberate (SURVEY §4.3):
 - min/max computed on the numeric timestamp, not lexicographically on
   strings (``main.py:120-121``); identical results for fixed-width
   epoch-seconds strings, correct for everything else.
-- Rows with null/unparseable timestamps are dropped uniformly
-  (counted, not crashed — ``main.py:93`` would raise on non-numeric).
+- Rows with null/unparseable timestamps never crash (``main.py:93``
+  would raise on non-numeric): ``sessionize_visits`` drops them,
+  ``with_session_columns`` keeps them with NULL session columns.
 
 Scale notes (100 TB): the only shuffle is on the user key. Web-scale
 user keys are power-law skewed (bots); AQE skew-join/agg splitting is
@@ -126,6 +127,9 @@ def with_session_columns(
 
     ``order_cols`` breaks timestamp ties deterministically (defaults to
     none — min/max/key results are tie-insensitive anyway).
+
+    Rows with a NULL ``ts`` are kept with all four columns NULL; they
+    sort first, so the timed rows' columns are as without them.
     """
     ts = F.col(ts_col)
     w_user = Window.partitionBy(user_col).orderBy(ts_col, *(order_cols or []))
@@ -136,10 +140,13 @@ def with_session_columns(
         ts.cast("double") - F.lag(ts.cast("double"), 1).over(w_user)
         > F.lit(float(gap_seconds))
     )
-    df = df.where(ts.isNotNull()).withColumn(
+    df = df.withColumn(
         "session_seq",
-        F.sum(F.when(is_new, 1).otherwise(0)).over(
-            w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        F.when(
+            ts.isNotNull(),
+            F.sum(F.when(is_new, 1).otherwise(0)).over(
+                w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
         ),
     )
     w_sess = Window.partitionBy(user_col, "session_seq")
@@ -155,7 +162,9 @@ def with_session_columns(
         key = F.concat_ws(
             "_", F.col(user_col).cast("string"), F.col("visit_start").cast("string")
         )
-    return df.withColumn("visit_key", key)
+    # concat_ws skips NULLs: without the guard an untimed row would key
+    # on the bare user id
+    return df.withColumn("visit_key", F.when(F.col("visit_start").isNotNull(), key))
 
 
 def visits_from_hits(
@@ -169,6 +178,7 @@ def visits_from_hits(
     window functions already created (hash on ``user`` clusters every
     finer key), so the whole visits+hits fan-out costs one shuffle —
     persist the ``with_session_columns`` result when writing both.
+    Pass timed rows only: untimed ones would group into a NULL visit.
     """
     aggs = [
         F.min("visit_start").alias("visit_start"),

@@ -1,11 +1,18 @@
 """The reference's end-to-end pipeline, Spark-first: hit log in,
 ``visits`` / ``hits`` / ``visitors`` out (``main.py:209-234``).
 
-Topology: ONE shuffle (the user-key exchange inside
-``with_session_columns``); hits, visits and visitors all derive from
-the same stamped DataFrame, which is persisted across the three sinks
-(Beam reuses pipeline branches implicitly; Spark needs the explicit
-``persist`` or each write would recompute the scan+shuffle).
+Topology: ONE input scan, ONE shuffle (the user-key exchange inside
+``with_session_columns``). The stamped frame holds every parsed row and
+is persisted across the three sinks (Beam reuses branches implicitly;
+Spark needs the ``persist``). Hits are its timed rows; visits group
+them on ``(visit_key, user_id)``, visitors de-duplicate on
+``(user_id, ibm_id, scv_id)`` — both keys hold the cache's hash key, so
+neither sink adds an exchange. The ``persist`` runs with cached-plan
+coalescing on (the conf is read when the cache is defined, so it is
+scoped to that call): without it the cache keeps every shuffle
+partition and each sink runs, and writes, that many tiny tasks.
+Spark's default stays off elsewhere because a coalesced cache can cost
+a join of two caches an extra shuffle.
 
 Faithful-vs-sane divergences (SURVEY §4.3.3), defaulting to sane:
 
@@ -20,10 +27,7 @@ Faithful (not a divergence): visitors derive from the PARSED rows
 before the timestamp filter — the reference's visitor branch taps the
 pipeline before its timestamp stage (``main.py:214`` vs ``:216``), so
 a row with an unparseable ts still yields a visitor, never a hit or
-visit. The visitors sink therefore re-scans the (cheap, codegen'd)
-parse rather than the persisted post-window frame: at scale an extra
-scan beats holding a second persisted copy, and the scan carries no
-shuffle.
+visit.
 """
 
 from __future__ import annotations
@@ -36,8 +40,10 @@ from pyspark.storagelevel import StorageLevel
 
 from web_analytics_visits_re_processing_spark.operators.sessionize import (
     DEFAULT_GAP_SECONDS,
+    visits_from_hits,
     with_session_columns,
 )
+from web_analytics_visits_re_processing_spark.session import scoped_conf
 from web_analytics_visits_re_processing_spark.sources.hitlog import read_hitlog
 
 # Reference output column orders (main.py:101, main.py:106, main.py:159).
@@ -73,19 +79,20 @@ def build_visits_pipeline(
     dedup_visitors: bool = True,
 ) -> VisitsPipelineResult:
     """Parsed hit log (see ``sources.hitlog``, ideally parsed with
-    ``drop_bad_ts=False``) → the three outputs.
-
-    Visitors tap ``parsed_hits`` directly (pre-ts-filter, matching the
-    reference's branch order); hits/visits derive from the persisted
-    sessionized frame, whose window step drops null-ts rows itself.
+    ``drop_bad_ts=False``) → the three outputs, all read from one
+    persisted frame: visitors from every parsed row (the reference's
+    branch order), hits and visits from the timed ones.
     """
-    stamped = with_session_columns(
-        parsed_hits, user_col="user_id", ts_col="ts", gap_seconds=gap_seconds
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    coalesce = {"spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true"}
+    with scoped_conf(parsed_hits.sparkSession, coalesce):
+        stamped = with_session_columns(
+            parsed_hits, user_col="user_id", ts_col="ts", gap_seconds=gap_seconds
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    hits = stamped.select(*HITS_COLUMNS)
-    visits = stamped.select(*VISITS_COLUMNS).dropDuplicates(["visit_key"])
-    visitors = parsed_hits.select(*VISITORS_COLUMNS)
+    timed = stamped.where(F.col("ts").isNotNull())
+    hits = timed.select(*HITS_COLUMNS)
+    visits = visits_from_hits(timed).select(*VISITS_COLUMNS)
+    visitors = stamped.select(*VISITORS_COLUMNS)
     if dedup_visitors:
         visitors = visitors.dropDuplicates(["user_id", "ibm_id", "scv_id"])
     return VisitsPipelineResult(hits=hits, visits=visits, visitors=visitors, stamped=stamped)

@@ -96,7 +96,8 @@ def q_sessionize_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    hits = with_session_columns(events, "user_id", "ts", 1800)
+    # the oracle sessionizes timed rows only; the operator keeps the rest
+    hits = with_session_columns(events.where(F.col("ts").isNotNull()), "user_id", "ts", 1800)
     return hits.select(
         "visit_key",
         "user_id",

@@ -242,8 +242,9 @@ def q_session_path_3grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count). The final count is a low-cardinality hash agg (≤125
     distinct paths at 5 event types)."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
+    # untimed rows would pass through with a NULL session_seq
     hits = with_session_columns(
-        ev, "user_id", "ts", 1800, order_cols=["event_id"]
+        ev.where(F.col("ts").isNotNull()), "user_id", "ts", 1800, order_cols=["event_id"]
     )
     from pyspark.sql import Window
 
@@ -475,7 +476,10 @@ def q_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. Endpoints are ordered by (ts, event_id) — deterministic
     under timestamp ties."""
     ev = _events(spark, sf_dir).select("user_id", "ts", "event_id", "event_type")
-    hits = with_session_columns(ev, "user_id", "ts", 1800, order_cols=["event_id"])
+    # untimed rows would form a phantom (user, NULL) session
+    hits = with_session_columns(
+        ev.where(F.col("ts").isNotNull()), "user_id", "ts", 1800, order_cols=["event_id"]
+    )
     order_key = F.struct("ts", "event_id")
     ends = hits.groupBy("user_id", "session_seq").agg(
         F.min_by("event_type", order_key).alias("entry_type"),

@@ -11,16 +11,18 @@ The knobs below are chosen for correctness-at-scale first:
 - **Arrow enabled** so the few Pandas-UDF operators (similarity
   fallbacks, multimodal decode) move data in columnar batches, not
   pickled rows.
-- ``spark.sql.shuffle.partitions`` defaults to 2× local cores here;
-  on a real cluster you would size it so each post-shuffle partition
-  is ~128-512 MB (e.g. 100 TB input with heavy reduction → tens of
-  thousands of partitions), or simply let AQE coalesce from a high
-  initial number.
+- ``spark.sql.shuffle.partitions`` is a fixed 32 whatever the core
+  count (``shuffle_partitions`` overrides it); on a real cluster you
+  would size it so each post-shuffle partition is ~128-512 MB (e.g.
+  100 TB input with heavy reduction → tens of thousands of
+  partitions), or simply let AQE coalesce from a high initial number.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -74,3 +76,21 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set runtime ``conf`` for the ``with`` body, then restore it, on
+    error too: a key that was set gets its old value back, a key that
+    was unset is unset again (not pinned to its default)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -46,6 +46,7 @@ from web_analytics_visits_re_processing_spark.operators.sessionize import (
     DEFAULT_GAP_SECONDS,
     visit_key_col,
 )
+from web_analytics_visits_re_processing_spark.session import scoped_conf
 
 # One-row sentinel schema for createDataFrame-based tests (the replay
 # staging itself writes the sentinel with pyarrow in the fixture's own
@@ -343,17 +344,14 @@ def _run_append_to_files(
     # and eviction counts, so raise it well past any probe's batch
     # count for the lifetime of this query (the buffer trims on each
     # progress event, reading the conf dynamically).
-    sess = result.sparkSession
-    _retention_key = "spark.sql.streaming.numRecentProgressUpdates"
-    _shuffle_key = "spark.sql.shuffle.partitions"
-    try:
-        _prev_retention = sess.conf.get(_retention_key)
-    except Exception:
-        _prev_retention = None
-    _prev_shuffle = sess.conf.get(_shuffle_key)
-    sess.conf.set(_retention_key, "10000")
-    sess.conf.set(_shuffle_key, shuffle_partitions or REPLAY_SHUFFLE_PARTITIONS)
-    try:
+    with scoped_conf(
+        result.sparkSession,
+        {
+            "spark.sql.streaming.numRecentProgressUpdates": "10000",
+            "spark.sql.shuffle.partitions": shuffle_partitions
+            or REPLAY_SHUFFLE_PARTITIONS,
+        },
+    ):
         q = (
             result.writeStream.format("parquet")
             .option("path", out)
@@ -367,12 +365,6 @@ def _run_append_to_files(
             q.stop()
             raise TimeoutError(f"append replay did not finish within {timeout_s}s")
         progress = list(q.recentProgress)
-    finally:
-        sess.conf.set(_shuffle_key, _prev_shuffle)
-        if _prev_retention is None:
-            sess.conf.unset(_retention_key)
-        else:
-            sess.conf.set(_retention_key, _prev_retention)
     assert len(progress) < 10000, (
         "progress buffer hit the retention cap - peak-state metrics "
         "would be truncated; raise numRecentProgressUpdates"

@@ -58,6 +58,8 @@ from pyspark.sql.streaming.stateful_processor import (
     TimerValues,
 )
 
+from web_analytics_visits_re_processing_spark.session import scoped_conf
+
 OUTPUT_SCHEMA = (
     "user_id long, first_ts_us long, last_ts_us long, "
     "n_events long, value_cents long"
@@ -244,14 +246,7 @@ def _tws_replay(
     )
 
     ensure_worker_protobuf(spark)  # state client needs protobuf in the worker
-    prev: dict[str, str | None] = {}
-    for k, v in _TWS_CONFS.items():
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _TWS_CONFS):
         workdir = os.path.join(
             _TMP_ROOT, subdir, os.path.basename(sf_dir.rstrip("/")) or "sf"
         )
@@ -264,12 +259,6 @@ def _tws_replay(
             workdir,
             shuffle_partitions=TWS_REPLAY_SHUFFLE_PARTITIONS,
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     # read back with the stream's own schema — skips a per-call footer
     # inference pass (see sessionize_stream._read_out)
     return (

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from web_analytics_visits_re_processing_spark.session import scoped_conf
+
 
 def _latest_version(state_dir: str) -> int:
     ptr = os.path.join(state_dir, "_LATEST")
@@ -99,11 +101,10 @@ def run_upsert_stream(
     # same scoped stateful-stage width as _run_append_to_files: the
     # replay starts a fresh checkpoint, so the state partitioning is
     # free to size to the stream instead of the session-wide 32
-    sess = stream_df.sparkSession
-    _shuffle_key = "spark.sql.shuffle.partitions"
-    _prev_shuffle = sess.conf.get(_shuffle_key)
-    sess.conf.set(_shuffle_key, REPLAY_SHUFFLE_PARTITIONS)
-    try:
+    with scoped_conf(
+        stream_df.sparkSession,
+        {"spark.sql.shuffle.partitions": REPLAY_SHUFFLE_PARTITIONS},
+    ):
         q = (
             writer.option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
@@ -113,5 +114,3 @@ def run_upsert_stream(
             q.stop()
             raise TimeoutError(f"upsert stream did not finish within {timeout_s}s")
         q.stop()
-    finally:
-        sess.conf.set(_shuffle_key, _prev_shuffle)
